@@ -132,17 +132,10 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // coalescePartitions.parallelismFirst stays at Spark's default (true):
+      // false let AQE pack the CPU-heavy, byte-small set-similarity stages
+      // onto a few tasks (d15/d20/d23 2-3× slower at the same executor CPU)
       .config("spark.sql.adaptive.enabled", "true")
-      // Let AQE's advisory partition size govern post-shuffle coalescing
-      // instead of defaultParallelism (parallelismFirst=true, the Spark
-      // default, keeps tiny shuffles fanned out to one partition per core
-      // — pure task-launch overhead at fixture scale, and the reason a
-      // tier of small-shuffle queries measured FASTER at 8 cores than 32
-      // in r17's scaling block). Scale-neutral: at production shuffle
-      // sizes the advisory size yields full parallelism anyway. Env
-      // override for A/B and for hosts that want the Spark default back.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
       // AQE is OFF inside persist() materializations by default (Spark
       // pins a cached plan's output partitioning), so every cache-heavy
       // query (d6/t36/d2/d22...) runs its groupBy stages at the full

@@ -23,8 +23,6 @@ object Scratch {
       .config("spark.sql.adaptive.enabled", "true")
       // mirror Bench's AQE posture so isolated profiles match the bench
       // (see the rationale comments in Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
       .config("spark.ui.enabled", "false")

@@ -16,7 +16,9 @@ import graft.sinks.UpsertSink
   * here:
   *   1. active symbol dim (J1)                        — one broadcast join
   *   2. sink extents per key (A1 generalized)         — one groupBy
-  *   3. gap plan W1∪W2→W3 for EVERY key              — one windowed job
+  *   3. gap plan W1∪W2→W3 for EVERY key              — one fused scan:
+  *      sink rows + one sentinel per active key, one shuffle by key, one
+  *      sorted streaming pass emitting merged gaps (no window operators)
   *   4. fetch windows (S3 pagination, `explode(sequence)`) — map-side
   *   5. fetch: injected `(key, window) → raw body` — in production a
   *      rate-limited REST task per partition (partitioned BY EXCHANGE so one
